@@ -5,10 +5,13 @@ metrics" (BASELINE.json:14; SURVEY.md §4.4). The unit of work is an
 input partition — `source` in the sandbox, `(source_bucket, day)` at
 10^12 scale; the manifest schema carries both via a string id.
 
-Resume = left_anti join of pending partitions against status='done'
-manifest rows (SURVEY.md J3). Manifest writes are parquet appends of a
-handful of rows per completed batch — atomic enough per partition-file;
-on Iceberg the same append is a snapshot commit.
+Resume = pending partitions minus the status='done' manifest rows
+(SURVEY.md J3). The done set is control-plane sized (one row per
+partition), so the pipeline takes the difference driver-side from one
+manifest read; filter_pending is the broadcast anti-join form for row
+frames. Manifest writes are parquet appends of a handful of rows per
+completed batch, built without a Python worker — atomic enough per
+partition-file; on Iceberg the same append is a snapshot commit.
 
 The token-array-equality invariant travels as `token_checksum`: an
 xor-fold of xxhash64(doc_id, tokens) per partition (order-independent,
@@ -22,7 +25,7 @@ import time
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -121,7 +124,14 @@ def read_manifest(spark: SparkSession, where) -> DataFrame:
                     or "Path does not exist" in msg
                 )
         if missing:
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            # an empty JVM-only frame: the optimizer folds scans of it
+            # away, so a first run's manifest queries start no job
+            return spark.range(0).select(
+                *[
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in MANIFEST_SCHEMA.fields
+                ]
+            )
         raise
 
 
@@ -195,31 +205,46 @@ def record_done(
     job_run_id: str,
     attempt_base: dict[str, int] | None = None,
 ) -> None:
+    """Append one status='done' manifest row per lineage dict.
+
+    The rows are built as a JVM-only plan (literal structs inlined over
+    a one-row range), not with createDataFrame over Python Rows, which
+    ships them through a Python worker — this append sits on every
+    wave, epoch and retention commit."""
+    if not lineage_rows:
+        return
     now = time.time()
     attempt_base = attempt_base or {}
-    rows = [
-        Row(
-            partition_id=r["partition_id"],
-            status="done",
-            rows_in=int(r.get("rows_in", 0)),
-            points_raw=int(r.get("points_raw", 0)),
-            points_1m=int(r.get("points_1m", 0)),
-            points_1h=int(r.get("points_1h", 0)),
-            points_1d=int(r.get("points_1d", 0)),
-            token_checksum=int(r.get("token_checksum") or 0),
-            wall_ms=float(r.get("wall_ms", 0.0)),
-            attempt=int(attempt_base.get(r["partition_id"], 0)) + 1,
-            job_run_id=job_run_id,
-            ts=now,
-            max_event_us=(
+    structs = []
+    for r in lineage_rows:
+        values = {
+            "partition_id": r["partition_id"],
+            "status": "done",
+            "rows_in": int(r.get("rows_in", 0)),
+            "points_raw": int(r.get("points_raw", 0)),
+            "points_1m": int(r.get("points_1m", 0)),
+            "points_1h": int(r.get("points_1h", 0)),
+            "points_1d": int(r.get("points_1d", 0)),
+            "token_checksum": int(r.get("token_checksum") or 0),
+            "wall_ms": float(r.get("wall_ms", 0.0)),
+            "attempt": int(attempt_base.get(r["partition_id"], 0)) + 1,
+            "job_run_id": job_run_id,
+            "ts": now,
+            "max_event_us": (
                 None
                 if r.get("max_event_us") is None
                 else int(r["max_event_us"])
             ),
+        }
+        structs.append(
+            F.struct(
+                *[
+                    F.lit(values[f.name]).cast(f.dataType).alias(f.name)
+                    for f in MANIFEST_SCHEMA.fields
+                ]
+            )
         )
-        for r in lineage_rows
-    ]
-    df = spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1)
+    df = spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
     if isinstance(where, str):
         df.write.mode("append").parquet(where)
     else:

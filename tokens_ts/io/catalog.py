@@ -30,6 +30,7 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class Catalog:
@@ -60,9 +61,16 @@ class Catalog:
             f for f in os.listdir(p) if not f.startswith(("_", "."))
         )
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, name: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """`schema` (parquet only; Iceberg tables carry their own) skips
+        the footer-sampling inference job — a writer reading back what
+        it just wrote passes the schema of the frame it wrote."""
         if self.fmt == "iceberg":
             return spark.read.table(self.ident(name))
+        if schema is not None:
+            return spark.read.schema(schema).parquet(self.path(name))
         return spark.read.parquet(self.path(name))
 
     def read_evolved(

@@ -4,15 +4,26 @@ run_backfill: sequences → extraction → raw tier → 1m → 1h → 1d, one
 partition-pruned distributed job per invocation, resumable at input-
 partition granularity via the checkpoint manifest. Rerunning after a
 crash reprocesses only pending partitions; completed partitions are
-skipped by an anti-join and their tier output is untouched (writes are
-idempotent dynamic partition overwrites).
+skipped (the done set comes from one manifest read per invocation)
+and their tier output is untouched (writes are idempotent dynamic
+partition overwrites).
+
+Each wave launches only the jobs that do work: one write per table and
+one manifest append (plus the skew probe under salt="auto"). Its
+lineage metrics (rows_in, token_checksum, points_raw/1m/1h/1d,
+max_event_us) are the writes' own observed metrics (DataFrame.observe
+on the frames the writes consume), not separate scans; wall_ms is the
+wave time ÷ wave size.
 
 run_increment: append-only micro-batch — recomputes exactly the
 (source, day) tier partitions touched by the new rows, reading back
 only those slices of raw (partition/row-group pruning does the rest).
-This is the batch-incremental realization of "cascading continuous
-aggregates" (BASELINE.json:14): 1h merges 1m partials, 1d merges 1h
-partials, never re-reading raw beyond the touched windows.
+
+Both paths write the tiers through _write_tiers, the batch realization
+of "cascading continuous aggregates" (BASELINE.json:14): 1m rolls up
+raw once, 1h merges the just-written 1m partials, 1d merges the
+just-written 1h partials, never re-reading raw beyond the touched
+windows.
 
 All tables live under a Catalog root:
   sequences                     (input; partitioned by source)
@@ -28,7 +39,7 @@ import time
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from tokens_ts import checkpoint, extract, tiers
 from tokens_ts.io.catalog import Catalog
@@ -48,27 +59,40 @@ def _with_day(df: DataFrame, ts_col: str) -> DataFrame:
     return df.withColumn("day", F.to_date(F.col(ts_col)))
 
 
-def _manifest_points(spark: SparkSession, cat: Catalog) -> list[float]:
-    """points_raw of every committed non-batch partition (latest
-    attempt) — the lineage feed for the salting baseline. Control-plane
-    sized (one value per input partition, the same bound as the
-    attempts collect in run_backfill). Collected ONCE per invocation;
-    waves fold their own just-measured points in driver-side, so the
-    baseline stays current without re-scanning the manifest per wave."""
+def _manifest_state(spark: SparkSession, cat: Catalog) -> list:
+    """One row per manifest partition_id: its latest attempt number,
+    whether any attempt is done, and the points_raw of its latest done
+    attempt. Control-plane sized (one row per input partition or
+    marker) and collected ONCE per invocation: it yields the pending
+    set, the attempt base and the salting baseline together."""
+    return (
+        checkpoint.read_manifest(spark, cat)
+        .groupBy("partition_id")
+        .agg(
+            F.max("attempt").alias("attempt"),
+            F.bool_or(F.col("status") == "done").alias("done"),
+            # max_by skips rows whose ordering is null: done rows only
+            F.max_by(
+                "points_raw",
+                F.when(F.col("status") == "done", F.struct("ts", "attempt")),
+            ).alias("pts"),
+        )
+        .collect()
+    )
+
+
+def _lineage_points(state: list) -> list[float]:
+    """points_raw of every committed non-batch partition (latest done
+    attempt) — the lineage feed for the salting baseline. Waves fold
+    their own just-measured points in driver-side, so the baseline
+    stays current without re-scanning the manifest per wave."""
     return [
         float(r["pts"])
-        for r in checkpoint.read_manifest(spark, cat)
-        .where(
-            (F.col("status") == "done")
-            # plain-source ids only: 'batch:'/'retention:' marker rows
-            # carry no per-partition ingest volume and would drag the
-            # median toward 0
-            & (~F.col("partition_id").contains(":"))
-        )
-        .groupBy("partition_id")
-        .agg(F.max_by("points_raw", F.struct("ts", "attempt")).alias("pts"))
-        .collect()
-        if r["pts"] is not None
+        for r in state
+        # plain-source ids only: 'batch:'/'retention:' marker rows
+        # carry no per-partition ingest volume and would drag the
+        # median toward 0
+        if r["done"] and ":" not in r["partition_id"] and r["pts"] is not None
     ]
 
 
@@ -104,7 +128,7 @@ def _auto_hot_keys(
         return None
     baseline = float(stats["med"])
     if hist_points is None:
-        hist_points = _manifest_points(spark, cat)
+        hist_points = _lineage_points(_manifest_state(spark, cat))
     hist_med = statistics.median(hist_points) if hist_points else None
     if hist_med is not None:
         nsrc = raw.select("source").distinct().count()
@@ -139,13 +163,15 @@ def run_backfill(
 
     Lineage is PARTITION-granular: partitions are processed in
     `commit_batch`-sized waves and each wave's manifest rows commit as
-    the wave completes, with the wave's measured wall_ms (per-partition
-    measured at the default commit_batch=1; averaged within a wave
-    otherwise). A crash mid-invocation therefore loses at most one
-    wave — the rerun's resume anti-join skips everything committed so
-    far. At 10^12 scale each input partition is itself a large
-    distributed job, so one wave per partition keeps the cluster
-    saturated; the sandbox default matches that production shape.
+    the wave completes. The rows' metrics are the wave's observed write
+    metrics, exact per partition at any commit_batch (one conditional
+    aggregate per partition id); wall_ms is the measured wave time ÷
+    wave size (per-partition measured at the default commit_batch=1).
+    A crash mid-invocation therefore loses at most one wave — the
+    rerun's pending set skips everything committed so far. At 10^12
+    scale each input partition is itself a large distributed job, so
+    one wave per partition keeps the cluster saturated; the sandbox
+    default matches that production shape.
 
     salt="auto" makes skew handling ENGINE behavior instead of a
     manual operator choice: each wave's rollup consults _auto_hot_keys
@@ -162,55 +188,54 @@ def run_backfill(
     cat = Catalog(out_root, fmt)
     run_id = checkpoint.new_run_id()
 
-    done = checkpoint.done_partitions(spark, cat)
-    pending = (
-        seq.select("source").distinct()
-        .join(done.withColumnRenamed("partition_id", "source"), "source", "left_anti")
-        .orderBy("source")
+    state = _manifest_state(spark, cat)
+    done = {r["partition_id"] for r in state if r["done"]}
+    part_ids = sorted(
+        {r["source"] for r in seq.select("source").distinct().collect()} - done
     )
-    part_ids = [r["source"] for r in pending.collect()]
     if max_partitions is not None:
         part_ids = part_ids[:max_partitions]
     if not part_ids:
         return {"run_id": run_id, "partitions": [], "skipped": True}
-
-    attempts = {
-        r["partition_id"]: r["attempt"]
-        for r in checkpoint.read_manifest(spark, cat)
-        .groupBy("partition_id")
-        .agg(F.max("attempt").alias("attempt"))
-        .collect()
-    }
+    attempts = {r["partition_id"]: r["attempt"] for r in state}
 
     t_start = time.time()
     n_commits = 0
     done_ids: list[str] = []
     hot_keys_flagged: list[tuple[str, str]] = []
-    # lineage baseline for salt="auto": one manifest scan per
-    # INVOCATION; each wave folds its own measured points_raw in below,
-    # so later waves see earlier waves' commits without re-reading.
-    hist_points = _manifest_points(spark, cat) if salt == "auto" else []
+    # lineage baseline for salt="auto": from the one manifest read
+    # above; each wave folds its own measured points_raw in below, so
+    # later waves see earlier waves' commits without re-reading.
+    hist_points = _lineage_points(state) if salt == "auto" else []
     for i in range(0, len(part_ids), max(commit_batch, 1)):
         group = part_ids[i : i + max(commit_batch, 1)]
         t_wave = time.time()
-        batch = seq.where(F.col("source").isin(group))
+        sel = F.col("source").isin(group)
 
-        # lineage input side: row counts + token checksums (invariant carrier)
-        lin = {
-            r["partition_id"]: dict(r.asDict())
-            for r in checkpoint.token_checksum_by_partition(batch).collect()
-        }
-
+        # lineage input side (row counts + token checksums, the
+        # invariant carrier) is observed on the rows the raw write
+        # consumes, not scanned separately
+        batch, lineage_in = _observe_by_partition(
+            seq.where(sel), group,
+            rows_in=(F.count, F.lit(1)),
+            token_checksum=(F.bit_xor, F.xxhash64("doc_id", "tokens")),
+        )
         # raw rows carry their producing batch id (the backfill run id
         # here; increments use theirs) — the key the upsert dedups on
-        raw = _with_day(extraction(batch), "event_ts").withColumn(
-            "batch_id", F.lit(run_id)
+        raw, raw_points = _observe_by_partition(
+            _with_day(extraction(batch), "event_ts").withColumn(
+                "batch_id", F.lit(run_id)
+            ),
+            group,
+            points_raw=(F.count, F.lit(1)),
+            # max event time — the watermark carrier
+            max_event_us=(F.max, F.unix_micros("event_ts")),
         )
         cat.overwrite_partitions(raw, "raw", ["source", "day"])
 
         raw_wave = (
-            cat.read(spark, "raw")
-            .where(F.col("source").isin(group))
+            cat.read(spark, "raw", schema=raw.schema)
+            .where(sel)
             .drop("day", "batch_id")
         )
         hot = (
@@ -224,51 +249,23 @@ def run_backfill(
             hot_keys_flagged.extend(
                 (r["source"], r["series_id"]) for r in hot.collect()
             )
-        tier_frames = tiers.build_all_tiers(raw_wave, hot_keys=hot)
-        for tier, name in TIER_NAMES.items():
-            cat.overwrite_partitions(
-                _with_day(tier_frames[tier], "window_start"), name, ["source", "day"]
-            )
+        observed = [lineage_in, raw_points] + _write_tiers(
+            spark, cat, raw_wave, sel, hot, group
+        )
 
-        # per-partition metrics from the written tables (counts are
-        # cheap: column-pruned scans over just-written partitions);
-        # raw also yields max event time — the watermark carrier
-        counts: dict[str, dict[str, int]] = {p: {} for p in group}
-        for r in (
-            cat.read(spark, "raw")
-            .where(F.col("source").isin(group))
-            .groupBy("source")
-            .agg(
-                F.count("*").alias("points_raw"),
-                F.max(F.unix_micros("event_ts")).alias("max_event_us"),
-            )
-            .collect()
-        ):
-            counts[r["source"]]["points_raw"] = r["points_raw"]
-            counts[r["source"]]["max_event_us"] = r["max_event_us"]
-        for t, name in TIER_NAMES.items():
-            for r in (
-                cat.read(spark, name)
-                .where(F.col("source").isin(group))
-                .groupBy("source").count().collect()
-            ):
-                counts[r["source"]][f"points_{t}"] = r["count"]
-
+        # per-partition metrics are the writes' own observed metrics
+        # (no read-back scans); wall_ms is the wave time ÷ wave size
         wave_ms = (time.time() - t_wave) * 1000.0
+        metrics: dict[str, dict] = {p: {} for p in group}
+        for read in observed:
+            for p, m in read().items():
+                metrics[p].update(m)
         rows = [
-            {
-                "partition_id": p,
-                "rows_in": lin.get(p, {}).get("rows_in", 0),
-                "token_checksum": lin.get(p, {}).get("token_checksum", 0),
-                "wall_ms": wave_ms / len(group),
-                **counts[p],
-            }
+            {"partition_id": p, "wall_ms": wave_ms / len(group), **metrics[p]}
             for p in group
         ]
         checkpoint.record_done(spark, cat, rows, run_id, attempts)
-        hist_points.extend(
-            float(counts[p].get("points_raw", 0)) for p in group
-        )
+        hist_points.extend(float(metrics[p]["points_raw"]) for p in group)
         done_ids.extend(group)
         n_commits += 1
         if (
@@ -292,6 +289,74 @@ def run_backfill(
         "wall_ms": wall_ms,
         "hot_keys": hot_keys_flagged,
     }
+
+
+def _observe_by_partition(
+    df: DataFrame, group: list[str], **metrics
+) -> tuple[DataFrame, Callable[[], dict[str, dict]]]:
+    """Attach one Observation to `df`: for each metric
+    name=(agg, value) and each partition id p in `group`, the aggregate
+    of `value` over the rows with source == p. One conditional
+    aggregate per (metric, partition) keeps a multi-partition wave
+    exact without a grouped scan. Returns the observed frame and a
+    reader that, once the action consuming the frame has finished,
+    gives {p: {name: value}}."""
+    obs = Observation()
+    observed = df.observe(
+        obs,
+        *[
+            agg(F.when(F.col("source") == p, value)).alias(f"{name}#{j}")
+            for j, p in enumerate(group)
+            for name, (agg, value) in metrics.items()
+        ],
+    )
+
+    def read() -> dict[str, dict]:
+        got = obs.get
+        return {
+            p: {name: got[f"{name}#{j}"] for name in metrics}
+            for j, p in enumerate(group)
+        }
+
+    return observed, read
+
+
+def _write_tiers(
+    spark: SparkSession,
+    cat: Catalog,
+    raw: DataFrame,
+    sel,
+    hot: DataFrame | None = None,
+    group: list[str] | None = None,
+) -> list[Callable[[], dict[str, dict]]]:
+    """Write the `sel` partitions of t1m from `raw`, then t1h from the
+    just-written t1m and t1d from the just-written t1h — each coarser
+    tier cascades from its finer tier's partitions, so the raw → 1m
+    rollup runs once (with the salt='auto' hot-key routing when `hot`
+    is given) and never inside a coarser write. Each read-back passes
+    the schema of the frame just written, so it starts no inference
+    job. With `group`, each write observes its per-partition row count
+    (points_1m/1h/1d); the readers are returned."""
+    frame = (
+        tiers.rollup_salted_hot(raw, "1m", hot_keys=hot)
+        if hot is not None
+        else tiers.rollup(raw, "1m")
+    )
+    observed = []
+    finer = None  # (table, schema) of the tier written last
+    for tier, name in TIER_NAMES.items():
+        if finer is not None:
+            written = cat.read(spark, finer[0], schema=finer[1])
+            frame = tiers.cascade(written.where(sel).drop("day"), tier)
+        out = _with_day(frame, "window_start").where(sel)
+        if group is not None:
+            out, read = _observe_by_partition(
+                out, group, **{f"points_{tier}": (F.count, F.lit(1))}
+            )
+            observed.append(read)
+        cat.overwrite_partitions(out, name, ["source", "day"])
+        finer = (name, out.schema)
+    return observed
 
 
 def _batch_id_and_count(new_seq: DataFrame) -> tuple[str, int]:
@@ -421,10 +486,7 @@ def run_increment(
         if salt == "auto"
         else None
     )
-    t = tiers.build_all_tiers(raw_touched, hot_keys=hot)
-    for tier, name in TIER_NAMES.items():
-        upd = _with_day(t[tier], "window_start").where(sel)
-        cat.overwrite_partitions(upd, name, ["source", "day"])
+    _write_tiers(spark, cat, raw_touched, sel, hot)
     if n_in < 0:
         n_in = new_seq.count()
     # the batch's max event time rides IN the completion row: the fold

@@ -41,6 +41,12 @@ def sequences(
     source NAME (token recurrence params come from the spec's index in
     the list, so the generator stays deterministic for any naming).
     k_total/n_sources are then ignored.
+
+    parallelism is the TOTAL partition budget of the whole table, not
+    a per-source count: each source gets a share proportional to its
+    slot budget (at least one partition, at most one per slot), so the
+    table has about `parallelism` partitions in all. None = two per
+    core (2 × defaultParallelism, at least 2).
     """
     if specs is None:
         from tokens_ts.registry import default_specs

@@ -414,9 +414,13 @@ def build_all_tiers(
 ) -> dict[str, DataFrame]:
     """raw → {'1m': ..., '1h': ..., '1d': ...} partial-state frames.
 
-    1h/1d are cascaded from 1m (never recomputed from raw) — this is
-    the incremental path: at 10^12 scale each cascade step reads ~60×
-    less data than the tier below it.
+    1h/1d are cascaded from 1m (never recomputed from raw): at 10^12
+    scale each cascade step reads ~60× less data than the tier below
+    it. The frames are lazy, so writing all three re-runs the raw → 1m
+    rollup inside each write; the pipeline (pipeline._write_tiers)
+    therefore writes 1m and cascades each coarser tier from the
+    just-written finer tier instead. This helper serves one-shot
+    in-memory builds (query pairs, tests).
 
     hot_keys: optional tiny (source, series_id) frame of keys the
     skew detector flagged — the 1m rollup then fans ONLY those keys
