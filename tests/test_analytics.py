@@ -2685,8 +2685,12 @@ def test_token_bucket_state_carries_across_arrow_batches(spark):
 def test_word_shingles_zipwith_edges(spark):
     """r6 focused test for the zip_with shingle chain: empty text,
     1-word, exactly-k and k+1 word docs produce the pinned shingle
-    sets (short docs -> one whole-doc shingle; duplicates distinct)."""
+    sets (short docs -> one whole-doc shingle; duplicates distinct).
+    The same rows pin every word-side caller's boundary: the dsir
+    bigrams, the non-distinct repetition 3-grams, and the bleu bigrams
+    (no whole-doc gram for a doc shorter than 2 words)."""
     from tokens_ts import dedup
+    from tokens_ts.grams import grams, shingles, words
 
     rows = [
         ("d0", ""),
@@ -2697,12 +2701,14 @@ def test_word_shingles_zipwith_edges(spark):
         ("d5", "a b a b a"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    out = {
-        r["doc_id"]: sorted(r["s"])
-        for r in df.select(
-            "doc_id", dedup.word_shingles("text", 3).alias("s")
-        ).collect()
-    }
+    got = df.select(
+        "doc_id",
+        dedup.word_shingles("text", 3).alias("s"),
+        shingles(words("text"), 2).alias("dsir"),
+        shingles(words("text"), 3).alias("rep"),
+        grams(words("text"), 2).alias("bleu"),
+    ).collect()
+    out = {r["doc_id"]: sorted(r["s"]) for r in got}
     assert out["d0"] == [""]
     assert out["d1"] == ["alpha"]
     assert out["d2"] == ["a b c"]
@@ -2710,12 +2716,30 @@ def test_word_shingles_zipwith_edges(spark):
     assert out["d4"] == ["x y"]
     assert out["d5"] == ["a b a", "b a b"]  # distinct
 
+    by = {r["doc_id"]: (r["dsir"], r["rep"], r["bleu"]) for r in got}
+    assert by["d0"] == ([""], [""], [])
+    assert by["d1"] == (["alpha"], ["alpha"], [])
+    assert by["d2"] == (["a b", "b c"], ["a b c"], ["a b", "b c"])
+    assert by["d3"] == (
+        ["a b", "b c", "c d"], ["a b c", "b c d"], ["a b", "b c", "c d"]
+    )
+    assert by["d4"] == (["x y"], ["x y"], ["x y"])
+    assert by["d5"] == (
+        ["a b", "b a", "a b", "b a"],
+        ["a b a", "b a b", "a b a"],  # repeats kept: repetition is the signal
+        ["a b", "b a", "a b", "b a"],
+    )
+
 
 def test_ngram_packed_keys_injective_at_int32_extremes(spark):
     """r6 focused test for the packed gram keys: token ids at the
     int32 extremes (including negatives and values whose low 32 bits
     collide with other tokens' high bits) must stay distinct through
-    the shift/or packing — counts match a per-row Python reference."""
+    the shift/or packing — counts match a per-row Python reference.
+    Also past n = 4 (grams that differ only after their 4th token) and
+    for bigint ids beyond 2^32 (ids equal in their low 32 bits)."""
+    from collections import Counter
+
     from tokens_ts import textops
 
     rows = [
@@ -2723,21 +2747,31 @@ def test_ngram_packed_keys_injective_at_int32_extremes(spark):
         ("x", [2147483647, -2147483648, 1, 65536]),
         ("x", [-1, 2147483647, -2147483648, 1]),
         ("x", [65536, 1, -2147483648, 2147483647]),
+        ("x", [7, 8, 9, 10, 11, 12]),
+        ("x", [7, 8, 9, 10, 13, 14]),
     ]
-    df = spark.createDataFrame(rows, "source string, tokens array<int>")
-    out = {
-        (r["n"]): (r["total"], r["distinct_grams"])
-        for r in textops.ngram_uniqueness(df, max_n=4).collect()
-    }
-    # python reference on the same gram definition (no PAD present)
-    from collections import Counter
-
-    for n in range(1, 5):
-        grams = Counter()
-        for _, toks in rows:
-            for p in range(len(toks) - n + 1):
-                grams[tuple(toks[p:p + n])] += 1
-        assert out[n] == (sum(grams.values()), len(grams)), n
+    wide = rows + [
+        ("x", [(1 << 32) + 1, 2, 3, 4, 5, 6]),
+        ("x", [1, 2, 3, 4, 5, (1 << 40) + 6]),
+        ("x", [-(1 << 62), 1, 2, 3, 4, 5]),
+    ]
+    for ddl, data, max_n in [
+        ("array<int>", rows, 4),
+        ("array<int>", rows, 6),
+        ("array<bigint>", wide, 6),
+    ]:
+        df = spark.createDataFrame(data, f"source string, tokens {ddl}")
+        out = {
+            (r["n"]): (r["total"], r["distinct_grams"])
+            for r in textops.ngram_uniqueness(df, max_n=max_n).collect()
+        }
+        # python reference on the same gram definition (no PAD present)
+        for n in range(1, max_n + 1):
+            grams = Counter()
+            for _, toks in data:
+                for p in range(len(toks) - n + 1):
+                    grams[tuple(toks[p:p + n])] += 1
+            assert out[n] == (sum(grams.values()), len(grams)), (ddl, max_n, n)
 
 
 def test_token_bucket_same_second_ordered_by_id_and_keys_isolated(spark):

@@ -5390,7 +5390,8 @@ def test_mutual_knn_reciprocity_hand_graph(spark):
 def test_token_window_dups_cross_doc_only(spark):
     """Within-doc repetition does NOT count: a doc repeating its own
     window scores 0 dup windows; two docs sharing a verbatim span
-    score every window inside the span; the dup fraction is exact."""
+    score every window inside the span; the dup fraction is exact. A
+    token column whose name needs quoting gives the same result."""
     rows = [
         # d1: own window [1..8] repeated twice -> within-doc only
         (1, "s1", list(range(1, 9)) + list(range(1, 9))),
@@ -5398,18 +5399,21 @@ def test_token_window_dups_cross_doc_only(spark):
         (2, "s2", list(range(100, 110))),
         (3, "s2", list(range(100, 110)) + [7, 7, 7, 7, 7, 7, 7, 7]),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, tokens array<int>")
-    out = {r["source"]: r for r in
-           dedup.token_window_dups(df, k=8).collect()}
-    # d1: 16 tokens -> 9 windows, all self-repeats only -> 0 dups
-    assert (out["s1"]["n_windows"], out["s1"]["n_dup_windows"]) == (9, 0)
-    # d2: 3 windows, all inside the shared span -> all dup
-    # d3: 18 tokens -> 11 windows; the 3 span windows dup, windows
-    # crossing into the unique tail and the 7-run do not (the 7-run
-    # window [7x8] appears only in d3)
-    assert out["s2"]["n_windows"] == 3 + 11
-    assert out["s2"]["n_dup_windows"] == 6
-    assert out["s2"]["dup_frac_e6"] == round(6 / 14 * 1e6)
+    for col in ("tokens", "tok ids"):
+        df = spark.createDataFrame(
+            rows, f"doc_id long, source string, `{col}` array<int>"
+        )
+        out = {r["source"]: r for r in
+               dedup.token_window_dups(df, k=8, tokens_col=col).collect()}
+        # d1: 16 tokens -> 9 windows, all self-repeats only -> 0 dups
+        assert (out["s1"]["n_windows"], out["s1"]["n_dup_windows"]) == (9, 0)
+        # d2: 3 windows, all inside the shared span -> all dup
+        # d3: 18 tokens -> 11 windows; the 3 span windows dup, windows
+        # crossing into the unique tail and the 7-run do not (the 7-run
+        # window [7x8] appears only in d3)
+        assert out["s2"]["n_windows"] == 3 + 11
+        assert out["s2"]["n_dup_windows"] == 6
+        assert out["s2"]["dup_frac_e6"] == round(6 / 14 * 1e6)
 
 
 def test_pq_recall_identity_when_corpus_is_codebook(spark):

@@ -15,6 +15,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import LongType
+
+from tokens_ts.grams import gram_key, grams, shingles, words
 
 
 def exact_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -29,27 +32,9 @@ def exact_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def word_shingles(text_col: str = "text", k: int = 3):
-    """k-gram word shingles as a distinct string array (expression).
-
-    r6: built as a zip_with chain over k pre-sliced views of the word
-    array — the old transform-over-positions re-evaluated
-    split(trim(text)) INSIDE the lambda for every position
-    (interpreted HOF lambdas have no cross-element CSE: O(words²)
-    per doc). zip_with's array arguments are evaluated once; the
-    lambda touches only elements. Identical shingle strings and
-    order; a doc shorter than k words still yields one whole-doc
-    shingle."""
-    w = F.split(F.trim(F.col(text_col)), r"\s+")
-    n = F.size(w)
-    m = n - (k - 1)
-    acc = F.slice(w, 1, m)
-    for j in range(1, k):
-        acc = F.zip_with(
-            acc, F.slice(w, 1 + j, m), lambda x, y: F.concat_ws(" ", x, y)
-        )
-    return F.array_distinct(
-        F.when(n >= k, acc).otherwise(F.array(F.array_join(w, " ")))
-    )
+    """k-gram word shingles as a distinct string array (expression);
+    a doc shorter than k words yields one whole-doc shingle."""
+    return F.array_distinct(shingles(words(text_col), k))
 
 
 _LONG_MAX = (1 << 63) - 1
@@ -537,36 +522,27 @@ def token_contamination(
     set's n-gram set.
 
     Same scale shape as contamination(): the eval side's distinct
-    gram hashes are broadcast (eval suites are small by definition),
+    gram keys are broadcast (eval suites are small by definition),
     the corpus explodes its grams ONCE, and one map-side-combined
     regroup emits per-doc counts — no corpus-side shuffle before the
     final agg. Sequences with < n non-PAD tokens survive with
     n_grams = 0 and a null ratio (explode_outer) rather than silently
-    vanishing. Hashing is md5_60 → every value is DuckDB-checkable."""
-    def grams(col):
-        clean = F.filter(F.col(col), lambda x: x != pad_id)
-        g = F.transform(
-            F.sequence(F.lit(0), F.size(clean) - n),
-            lambda i: F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice(clean, i + 1, n), lambda x: x.cast("string")
-                ),
-            ),
-        )
-        return F.when(F.size(clean) >= n, g).otherwise(
-            F.array().cast("array<string>")
-        )
+    vanishing. Grams are compared by their grams.gram_key (exact; int
+    and bigint id tables compare by value)."""
+    et, ev = (
+        f.schema[tokens_col].dataType.elementType for f in (seq, eval_seq)
+    )
+    dtype = et if et == ev else LongType()
+
+    clean = F.filter(F.col(tokens_col), lambda x: x != pad_id)
+    keys = gram_key(clean, n, dtype)
 
     eval_hashes = (
-        eval_seq.select(F.explode(grams(tokens_col)).alias("s"))
-        .select(md5_60(F.col("s")).alias("h"))
+        eval_seq.select(F.explode(keys).alias("h"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    corpus = seq.select(
-        id_col, source_col, F.explode_outer(grams(tokens_col)).alias("s")
-    ).select(id_col, source_col, md5_60(F.col("s")).alias("h"))
+    corpus = seq.select(id_col, source_col, F.explode_outer(keys).alias("h"))
     marked = corpus.join(F.broadcast(eval_hashes), "h", "left")
     agg = marked.groupBy(id_col, source_col).agg(
         F.sum(
@@ -780,7 +756,7 @@ def dedup_funnel(
 
     Scale shape: two hash-groupBy passes (md5 keys, never the text)
     + one sources-bounded agg."""
-    nw = F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("bigint")
+    nw = F.size(words(text_col)).cast("bigint")
     canon = F.trim(
         F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", " ")
     )
@@ -842,10 +818,14 @@ def dup_span_coverage(
         docs.where(F.trim(F.col(text_col)) != "")
         .select(
             F.col(id_col).alias("doc_id"),
-            F.split(F.trim(F.col(text_col)), r"\s+").alias("w"),
+            words(text_col).alias("w"),
         )
         .withColumn("n_words", F.size("w").cast("bigint"))
     )
+    # not grams.grams: its zip_with chain builds each k-word gram
+    # through k-1 intermediate strings (about 20% slower at k = 5);
+    # one array_join per start position over the materialized word
+    # column re-evaluates nothing
     grams = d.select(
         "doc_id",
         F.posexplode(
@@ -1234,17 +1214,9 @@ def bleu_pairs(
         pairs = lsh_candidates(
             docs, n_perm, bands, text_col, max_bucket, hash_mode
         )
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    bigrams = F.when(
-        F.size("_w") >= 2,
-        F.expr(
-            "transform(sequence(1, size(_w) - 1),"
-            " i -> concat_ws(' ', element_at(_w, i), element_at(_w, i + 1)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     side = docs.select(
-        "doc_id", toks.alias("_w")
-    ).withColumn("_g", bigrams)
+        "doc_id", words(text_col).alias("_w")
+    ).withColumn("_g", grams(F.col("_w"), 2))
 
     def clip(cand, ref):
         return F.expr(
@@ -1313,31 +1285,21 @@ def token_window_dups(
 
     A window is duplicated iff its exact k-token content occurs in
     ≥ 2 DISTINCT documents (within-doc repeats alone do not count —
-    that is seq_dup_ngram's job, pinned). Window keys are the
-    comma-joined token ids — exact string equality, PAD included
-    as-is (PAD runs ARE boilerplate). All counts exact integers; one
-    final e6 ratio per source.
+    that is seq_dup_ngram's job, pinned). Windows are compared by
+    their grams.gram_key (exact), PAD included as-is (PAD runs ARE
+    boilerplate); sequences shorter than k have no windows. All counts
+    exact integers; one final e6 ratio per source.
 
     Scale shape: windows explode row-locally (n−k+1 per sequence);
     the key-cardinality agg and the key join are the two corpus-scale
     shuffles — the honest price of EXACT span dedup (the reason the
     sketch path exists), both hash-partitioned on the window key with
     map-side combine, never a sort."""
+    dtype = seq.schema[tokens_col].dataType.elementType
     w = seq.select(
         id_col,
         source_col,
-        F.explode(
-            # r6 advice fix: a sequence shorter than k tokens made
-            # sequence(1, n-k+1) descend through 0 and negatives and
-            # slice() threw INVALID_PARAMETER_VALUE.START — guard like
-            # the bigram ops: short sequences contribute no windows
-            F.expr(
-                f"CASE WHEN size({tokens_col}) >= {k} THEN "
-                f"transform(sequence(1, size({tokens_col}) - {k} + 1),"
-                f" i -> concat_ws(',', slice({tokens_col}, i, {k}))) "
-                f"ELSE CAST(array() AS array<string>) END"
-            )
-        ).alias("_wk"),
+        F.explode(gram_key(F.col(tokens_col), k, dtype)).alias("_wk"),
     )
     keys = w.groupBy("_wk").agg(
         F.countDistinct(id_col).cast("bigint").alias("_nd")

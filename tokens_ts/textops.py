@@ -13,14 +13,26 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-def _words():
-    # built lazily: Column construction needs an active SparkContext
-    return F.split(F.trim(F.col("text")), r"\s+")
+from tokens_ts.grams import gram_key, grams, shingles, words
+
+
+def _pair(a, b):
+    return F.struct(a.alias("a"), b.alias("b"))
+
+
+def _bigrams(seq: DataFrame, tokens_col: str, pad_id: int, *keep) -> DataFrame:
+    """The row-local bigram stream the bigram statistics read: one row
+    (keep…, a, b) per adjacent token pair. PAD breaks adjacency: a pair
+    is kept iff both sides are non-PAD."""
+    pairs = grams(F.col(tokens_col), 2, _pair)
+    return seq.select(*keep, F.inline(pairs)).where(
+        (F.col("a") != pad_id) & (F.col("b") != pad_id)
+    )
 
 
 def with_token_count(docs: DataFrame) -> DataFrame:
     """Whitespace token count (the cheapest budget-planning proxy)."""
-    return docs.withColumn("n_words", F.size(_words()).cast("bigint"))
+    return docs.withColumn("n_words", F.size(words("text")).cast("bigint"))
 
 
 # BPE-ish pre-tokenizer: word chunks, numbers, and each punctuation
@@ -265,7 +277,7 @@ def with_bpe_ids(docs: DataFrame) -> DataFrame:
 def with_quality(docs: DataFrame) -> DataFrame:
     """Quality features: type-token ratio, mean word length, stopword
     ratio — the standard cheap filters for web-scale corpus curation."""
-    w = _words()
+    w = words("text")
     n = F.size(w).cast("double")
     distinct_n = F.size(F.array_distinct(w)).cast("double")
     sum_len = F.aggregate(
@@ -293,7 +305,7 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 
 
 def with_langid(docs: DataFrame) -> DataFrame:
-    w = _words()
+    w = words("text")
     scored = docs
     for name, prof in LANG_PROFILES.items():
         scored = scored.withColumn(
@@ -315,19 +327,7 @@ def with_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
     get filtered before training. Non-distinct shingles here (unlike
     dedup.word_shingles) — repetition IS the signal. Pure expressions,
     whole-stage codegen."""
-    # r6: zip_with chain splits the text once (the old transform
-    # re-split it per position — O(words²); see dedup.word_shingles)
-    _w = F.split(F.trim(F.col(text_col)), r"\s+")
-    _nw = F.size(_w)
-    _m = _nw - 2
-    _acc = F.slice(_w, 1, _m)
-    for _j in (1, 2):
-        _acc = F.zip_with(
-            _acc, F.slice(_w, 1 + _j, _m), lambda x, y: F.concat_ws(" ", x, y)
-        )
-    sh_all = F.when(_nw >= 3, _acc).otherwise(
-        F.array(F.array_join(_w, " "))
-    )
+    sh_all = shingles(words(text_col), 3)
     n = F.size(sh_all)
     return docs.withColumn("n_3grams", n.cast("bigint")).withColumn(
         "dup3_frac",
@@ -391,13 +391,13 @@ def with_fingerprint(docs: DataFrame, gram: int = 8, stride: int = 4) -> DataFra
 
     Collapses near-identical boilerplate to one fingerprint (winnowing
     with window = whole doc); group-by fingerprint ≈ cheap near-dedup."""
-    return docs.withColumn(
-        "fingerprint",
-        F.expr(
-            f"array_min(transform(sequence(1, greatest(length(text) - {gram - 1}, 1), {stride}),"
-            f" i -> md5(substring(text, i, {gram}))))"
-        ),
+    text = F.col("text")
+    last = F.greatest(F.length(text) - (gram - 1), F.lit(1))
+    hashes = F.transform(
+        F.sequence(F.lit(1), last, F.lit(stride)),
+        lambda i: F.md5(F.substring(text, i, F.lit(gram))),
     )
+    return docs.withColumn("fingerprint", F.array_min(hashes))
 
 
 def unigram_logprob(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"):
@@ -556,26 +556,11 @@ def bigram_pmi_topk(
 
     Ranking is on the E6-ROUNDED pmi (the tfidf_top_terms ulp rule),
     ties broken (a ASC, b ASC). Shapes: the bigram stream is built
-    row-locally (transform over 0..n−2, no posexplode self-join);
+    row-locally (_bigrams, no posexplode self-join);
     unigram and bigram count frames are vocab-/vocab²-bounded; the
     two totals ride as broadcast 1-row frames; top-k plans as
     TakeOrderedAndProject — no global sort, no corpus-sized join."""
-    toks = F.col(tokens_col)
-    pairs = seq.select(
-        F.explode(
-            F.when(
-                F.size(toks) >= 2,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda i: F.struct(
-                        F.get(toks, i).alias("a"), F.get(toks, i + 1).alias("b")
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<a:int,b:int>>"))
-        ).alias("bg")
-    ).select("bg.a", "bg.b").where(
-        (F.col("a") != pad_id) & (F.col("b") != pad_id)
-    )
+    pairs = _bigrams(seq, tokens_col, pad_id)
     # the unigram frame feeds three subtrees (both join dims + the
     # total) and the bigram stream two (total-before-filter + the
     # support-filtered counts): cache the vocab-/vocab²-bounded count
@@ -1310,21 +1295,13 @@ def with_dup_ngram(
     Gopher repetition rule applied to token IDS instead of text
     (with_repetition's twin for pre-tokenized corpora): of the
     len−n+1 sliding n-grams in the token array, what fraction are
-    repeats of an earlier one. Row-local Catalyst throughout
-    (transform/slice/array_distinct) — zero shuffles, zero Python;
-    sequences shorter than n emit nulls."""
+    repeats of an earlier one, grams compared by their grams.gram_key.
+    Row-local Catalyst throughout (slice/zip_with/array_distinct) —
+    zero shuffles, zero Python; sequences shorter than n emit nulls."""
     toks = F.col(tokens_col)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(
-            ",",
-            F.transform(
-                F.slice(toks, i + 1, n), lambda x: x.cast("string")
-            ),
-        ),
-    )
+    keys = gram_key(toks, n, seq.schema[tokens_col].dataType.elementType)
     n_grams = F.size(toks) - n + 1
-    guarded = F.when(F.size(toks) >= n, grams)
+    guarded = F.when(F.size(toks) >= n, keys)
     return (
         seq.withColumn("_dg", guarded)
         .withColumn("n_grams", F.when(F.size(toks) >= n, n_grams))
@@ -1400,29 +1377,13 @@ def bigram_logprob(
     LEFT element of kept bigrams, so the smoothed conditionals
     normalize exactly; docs with zero kept bigrams are dropped.
 
-    Shapes: the bigram stream is row-local (transform over positions,
-    no posexplode self-join); the corpus count frames are vocab²- and
+    Shapes: the bigram stream is row-local (_bigrams, no posexplode
+    self-join); the corpus count frames are vocab²- and
     vocab-bounded; the one corpus-sized join is doc-bigrams ⋈ bigram
     counts on (a, b) — an equi-join AQE can broadcast when the
     observed-bigram set is small. avg_nll = −lp/n rides along as the
     filterable quality score."""
-    toks = F.col(tokens_col)
-    pairs = seq.select(
-        id_col,
-        F.explode(
-            F.when(
-                F.size(toks) >= 2,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda i: F.struct(
-                        F.get(toks, i).alias("a"), F.get(toks, i + 1).alias("b")
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<a:int,b:int>>"))
-        ).alias("bg"),
-    ).select(id_col, "bg.a", "bg.b").where(
-        (F.col("a") != pad_id) & (F.col("b") != pad_id)
-    )
+    pairs = _bigrams(seq, tokens_col, pad_id, id_col)
     bgc = pairs.groupBy("a", "b").agg(F.count("*").alias("cab"))
     ua = bgc.groupBy("a").agg(F.sum("cab").alias("ca"))
     v = (
@@ -1577,23 +1538,7 @@ def cond_entropy(
     One row-local bigram stream → vocab²-bounded counts; everything
     downstream is counts-frame-sized. ln of INTEGER counts keeps the
     cross-engine error at libm-ulp level, far under the e6 grain."""
-    toks = F.col(tokens_col)
-    pairs = seq.select(
-        by,
-        F.explode(
-            F.when(
-                F.size(toks) >= 2,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda i: F.struct(
-                        F.get(toks, i).alias("a"), F.get(toks, i + 1).alias("b")
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<a:int,b:int>>"))
-        ).alias("bg"),
-    ).select(by, "bg.a", "bg.b").where(
-        (F.col("a") != pad_id) & (F.col("b") != pad_id)
-    )
+    pairs = _bigrams(seq, tokens_col, pad_id, by)
     bgc = pairs.groupBy(by, "a", "b").agg(F.count("*").alias("cab"))
     ua = bgc.groupBy(by, "a").agg(F.sum("cab").alias("ca"))
     j = bgc.join(ua, [by, "a"])
@@ -1638,23 +1583,12 @@ def nll_drift(
     prev-counts on (group, a, b, epoch arithmetic) — the ks_drift
     epoch-shift equi-join, no windows, no corpus self-join."""
     step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
-    toks = F.col(tokens_col)
-    pairs = seq.select(
+    pairs = _bigrams(
+        seq,
+        tokens_col,
+        pad_id,
         by,
         F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        F.explode(
-            F.when(
-                F.size(toks) >= 2,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda i: F.struct(
-                        F.get(toks, i).alias("a"), F.get(toks, i + 1).alias("b")
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<a:int,b:int>>"))
-        ).alias("bg"),
-    ).select(by, "ep", "bg.a", "bg.b").where(
-        (F.col("a") != pad_id) & (F.col("b") != pad_id)
     )
     bgc = pairs.groupBy(by, "ep", "a", "b").agg(F.count("*").alias("cab"))
     ua = bgc.groupBy(by, "ep", "a").agg(F.sum("cab").alias("ca"))
@@ -1722,16 +1656,16 @@ def keyness_g2(
     from there on); word totals re-aggregated from those counts (NOT a
     second corpus pass); group totals broadcast; rank window over
     groups×vocab rows. No corpus-sized join anywhere."""
-    words = docs.select(
+    ws = docs.select(
         F.col(group_col).alias("g"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"),
+        F.explode(words(text_col)).alias("w"),
     ).where(F.col("w") != "")
     # gw feeds four consumers (totals, word totals, grand total, the
     # join); WITHOUT materialization Catalyst re-derives it per
     # consumer and the CORPUS is rescanned 5x (caught by
     # test_plans.py::test_keyness_no_second_corpus_pass). The frame is
     # groups*vocab-bounded - safe executor state at any corpus size.
-    gw = words.groupBy("g", "w").agg(F.count("*").cast("bigint").alias("a")).cache()
+    gw = ws.groupBy("g", "w").agg(F.count("*").cast("bigint").alias("a")).cache()
     gtot = gw.groupBy("g").agg(F.sum("a").cast("bigint").alias("c"))
     wtot = gw.groupBy("w").agg(F.sum("a").cast("bigint").alias("ab"))
     tot = gtot.agg(F.sum("c").cast("bigint").alias("t"))
@@ -1786,10 +1720,8 @@ def mattr(
     slice → array_distinct → size) inside whole-stage codegen — zero
     shuffles, O(n·window) work per doc, embarrassingly parallel at any
     corpus size."""
-    words = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda w: w != ""
-    )
-    d = docs.withColumn("_ws", words).withColumn(
+    ws = F.filter(words(text_col), lambda w: w != "")
+    d = docs.withColumn("_ws", ws).withColumn(
         "n_words", F.size("_ws").cast("bigint")
     ).where(F.col("n_words") >= 1)
     n = F.col("n_words")
@@ -1842,24 +1774,11 @@ def textrank_keywords(
     (group, a, b) count — edge-set-bounded from there on; each
     iteration is ONE vocab-bounded join + agg (3 total), never a
     corpus rescan; degrees are attached once up front."""
-    ws = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda w: w != ""
-    )
+    ws = F.filter(words(text_col), lambda w: w != "")
     d = docs.select(F.col(group_col).alias("g"), ws.alias("_ws")).where(
         F.size("_ws") >= 2
     )
-    bigr = d.select(
-        "g",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), (F.size("_ws") - 1).cast("int")),
-                lambda i: F.struct(
-                    F.get(F.col("_ws"), i - 1).alias("a"),
-                    F.get(F.col("_ws"), i).alias("b"),
-                ),
-            )
-        ).alias("e"),
-    ).select("g", F.col("e.a").alias("a"), F.col("e.b").alias("b")).where(
+    bigr = d.select("g", F.inline(grams(F.col("_ws"), 2, _pair))).where(
         F.col("a") != F.col("b")
     )
     sym = bigr.union(bigr.select("g", F.col("b").alias("a"), F.col("a").alias("b")))
@@ -1915,72 +1834,44 @@ def ngram_uniqueness(
     cross-doc aggregate view.
 
     Pinned rules: an n-gram is kept iff ALL n positions are non-PAD
-    (PAD breaks adjacency — the bigram_pmi rule generalized); grams
-    are serialized with a ',' join (separator-safe: token ids are
-    integers, so ',' cannot occur inside an element); groups with zero
-    kept n-grams at some n emit no row for that n.
+    (PAD breaks adjacency — the bigram_pmi rule generalized); grams are
+    compared by their grams.gram_key, which is injective for any max_n
+    and for int or bigint ids; groups with zero kept n-grams at some n
+    emit no row for that n.
 
-    Shapes: the n-gram streams are ROW-LOCAL array expressions flattened
-    into one explode; ONE (group, n, gram-key) count agg (map-side
-    combined) then a groups×n-bounded finish. The gram key is the
-    PACKED FIXED-WIDTH form (n ≤ 4 int32 tokens → two bigints via
-    shift/or — injective per n, so distinct keys ↔ distinct grams
-    exactly): r5 measured the original string-serialized grams
-    explode-volume-bound, but the "volume" cost was the per-gram
-    expression work (two array slices + a per-element string cast +
-    a join per gram); packing replaces that with ~n array gets and
-    two shift/ors, and the agg hashes 20-byte fixed-width keys
+    Shapes: the n-gram keys are ROW-LOCAL array expressions exploded
+    once per n; ONE (group, n, key) count agg (map-side combined) then
+    a groups×n-bounded finish. Keys are fixed-width bigint fields
+    (int ids at max_n = 4: two), so the agg hashes fixed-width keys
     instead of variable strings (r6, guide §2.3 narrower types —
     before/after in OPTIMIZATION_r06.md). At 10^12 scale this op
     rides the per-(source, day) wave bound like every tier job,
     never one corpus-wide agg."""
-    toks = F.col(tokens_col)
-
-    def _pack2(a, b):
-        # injective int32-pair → int64: (a << 32) | (b & 0xFFFFFFFF)
-        return F.shiftleft(a.cast("bigint"), 32).bitwiseOR(
-            b.cast("bigint").bitwiseAND(F.lit(0xFFFFFFFF))
-        )
-
-    _zero = F.lit(0).cast("bigint")
-
-    def grams(n: int):
-        def tok(p, j):
-            return F.get(toks, p + j) if j else F.get(toks, p)
-
-        def ok(p):
-            c = tok(p, 0) != pad_id
-            for j in range(1, n):
-                c = c & (tok(p, j) != pad_id)
-            return c
-
-        def key(p):
-            k1 = _pack2(tok(p, 0), tok(p, 1) if n >= 2 else F.lit(0))
-            k2 = (
-                _pack2(tok(p, 2), tok(p, 3) if n >= 4 else F.lit(0))
-                if n >= 3
-                else _zero
+    dtype = seq.schema[tokens_col].dataType.elementType
+    # PAD → null, so every gram touching a PAD gets a null key field
+    t = seq.select(
+        F.col(group_col).alias("g"),
+        F.transform(tokens_col, lambda x: F.when(x != pad_id, x)).alias("_t"),
+    )
+    by_n = F.array(
+        *[
+            F.struct(
+                F.lit(n).alias("n"),
+                gram_key(F.col("_t"), n, dtype, max_n).alias("ks"),
             )
-            return F.struct(
-                F.lit(n).alias("n"), k1.alias("k1"), k2.alias("k2")
-            )
-
-        kept = F.transform(
-            F.filter(
-                F.sequence(F.lit(0), (F.size(toks) - n).cast("int")), ok
-            ),
-            key,
-        )
-        return F.when(F.size(toks) >= n, kept).otherwise(
-            F.array().cast("array<struct<n:int,k1:bigint,k2:bigint>>")
-        )
-
-    combined = F.flatten(F.array(*[grams(n) for n in range(1, max_n + 1)]))
-    rows = seq.select(
-        F.col(group_col).alias("g"), F.explode(combined).alias("e")
-    ).select("g", F.col("e.n").alias("n"), F.col("e.k1").alias("k1"), F.col("e.k2").alias("k2"))
-    counts = rows.groupBy("g", "n", "k1", "k2").agg(
-        F.count("*").cast("bigint").alias("cnt")
+            for n in range(1, max_n + 1)
+        ]
+    )
+    rows = (
+        t.select("g", F.inline(by_n))
+        .select("g", "n", F.explode("ks").alias("k"))
+        .select("g", "n", "k.*")
+    )
+    keys = rows.columns[2:]
+    counts = (
+        rows.dropna(subset=keys)
+        .groupBy("g", "n", *keys)
+        .agg(F.count("*").cast("bigint").alias("cnt"))
     )
     return counts.groupBy("g", "n").agg(
         F.sum("cnt").cast("bigint").alias("total"),
@@ -2015,13 +1906,13 @@ def burrows_delta(
     Shapes: one explode → (group, word) count; the panel, spine, z
     matrix and pair join are all groups×M / groups²×M bounded — the
     corpus is scanned once."""
-    words = docs.select(
+    ws = docs.select(
         F.col(group_col).alias("g"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"),
+        F.explode(words(text_col)).alias("w"),
     ).where(F.col("w") != "")
     # groups*vocab-bounded and reused 3x (panel, totals, cells) -
     # cached for the same single-corpus-scan guarantee as keyness_g2
-    gw = words.groupBy("g", "w").agg(F.count("*").cast("bigint").alias("cnt")).cache()
+    gw = ws.groupBy("g", "w").agg(F.count("*").cast("bigint").alias("cnt")).cache()
     panel = (
         gw.groupBy("w")
         .agg(F.sum("cnt").alias("tot"))
@@ -2120,9 +2011,7 @@ def readability(
 
     Shapes: entirely row-local regexp/array expressions in whole-stage
     codegen — zero shuffles, zero joins."""
-    words = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda w: w != ""
-    )
+    ws = F.filter(words(text_col), lambda w: w != "")
     sents = F.greatest(
         F.size(
             F.filter(
@@ -2133,7 +2022,7 @@ def readability(
         F.lit(1),
     )
     syl = F.aggregate(
-        words,
+        ws,
         F.lit(0).cast("bigint"),
         lambda acc, w: acc
         + F.greatest(
@@ -2141,7 +2030,7 @@ def readability(
             F.lit(1),
         ),
     )
-    d = docs.withColumn("n_words", F.size(words).cast("bigint")).where(
+    d = docs.withColumn("n_words", F.size(ws).cast("bigint")).where(
         F.col("n_words") >= 1
     )
     d = d.withColumn("n_sentences", sents.cast("bigint")).withColumn(
@@ -2224,23 +2113,7 @@ def kneser_ney_logprob(
     Shapes: row-local bigram stream; count frames vocab²/vocab-
     bounded; neighbor-count dims broadcast; ONE corpus-sized
     equi-join on (a, b)."""
-    toks = F.col(tokens_col)
-    pairs = seq.select(
-        id_col,
-        F.explode(
-            F.when(
-                F.size(toks) >= 2,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda i: F.struct(
-                        F.get(toks, i).alias("a"), F.get(toks, i + 1).alias("b")
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<a:int,b:int>>"))
-        ).alias("bg"),
-    ).select(id_col, "bg.a", "bg.b").where(
-        (F.col("a") != pad_id) & (F.col("b") != pad_id)
-    )
+    pairs = _bigrams(seq, tokens_col, pad_id, id_col)
     bgc = pairs.groupBy("a", "b").agg(F.count("*").alias("cab"))
     ua = bgc.groupBy("a").agg(
         F.sum("cab").alias("ca"), F.count("*").alias("n1pa")
@@ -2292,8 +2165,8 @@ def chunk_sliding(
     whole-stage codegen end to end."""
     if stride <= 0 or width <= 0 or stride > width:
         raise ValueError("need 0 < stride <= width")
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    n = F.size(words)
+    ws = words(text_col)
+    n = F.size(ws)
     n_chunks = (
         F.lit(1)
         + F.floor(
@@ -2303,7 +2176,7 @@ def chunk_sliding(
     )
     ex = docs.select(
         id_col,
-        words.alias("_w"),
+        ws.alias("_w"),
         F.posexplode(F.sequence(F.lit(0), n_chunks - 1)).alias(
             "chunk_idx", "_ci"
         ),
@@ -2491,7 +2364,7 @@ def mixture_weights(
     1-row aggregate (control plane). The weights then drive a
     row-local hash filter (mixture_sample) — planning and sampling
     stay two cheap passes."""
-    w = F.split(F.trim(F.col("text")), r"\s+")
+    w = words("text")
     nw = F.size(w)
     passes = (nw >= min_words) & (
         F.size(F.array_distinct(w)) * 10 > nw * 3
@@ -2751,7 +2624,7 @@ def token_cube(docs: DataFrame, source_col: str = "source") -> DataFrame:
     Scale shape: Spark expands CUBE into grouping sets inside ONE
     map-side-combined aggregation — corpus scanned once, output
     bounded by Π(cardinalities+1)."""
-    nw = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
+    nw = F.size(words("text")).cast("bigint")
     return (
         docs.withColumn("_nw", nw)
         .cube(source_col, "lang")
@@ -2856,18 +2729,17 @@ def phrase_search(
     a real deployment the posting lists are the stored index and the
     build is amortized; here both build and query are measured
     together."""
-    words = [w for w in phrase.strip().split() if w]
-    if len(words) < 2:
+    terms = [w for w in phrase.strip().split() if w]
+    if len(terms) < 2:
         raise ValueError("phrase_search needs a multi-word phrase")
-    ws = F.split(F.trim(F.col(text_col)), r"\s+")
     post = (
-        docs.select(id_col, F.posexplode(ws).alias("pos", "w"))
-        .where(F.col("w").isin(words))
+        docs.select(id_col, F.posexplode(words(text_col)).alias("pos", "w"))
+        .where(F.col("w").isin(terms))
     )
-    out = post.where(F.col("w") == words[0]).select(
+    out = post.where(F.col("w") == terms[0]).select(
         id_col, F.col("pos").alias("p0")
     )
-    for k, w in enumerate(words[1:], start=1):
+    for k, w in enumerate(terms[1:], start=1):
         nxt = post.where(F.col("w") == w).select(
             id_col, (F.col("pos") - k).alias("p0")
         )
@@ -2979,11 +2851,11 @@ def inverted_index(
     n_docs = docs.where(
         F.trim(F.col(text_col)) != ""
     ).count()
-    words = docs.select(
+    ws = docs.select(
         F.col(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term"),
+        F.explode(words(text_col)).alias("term"),
     ).where(F.col("term") != "")
-    tf = words.groupBy("term", id_col).agg(
+    tf = ws.groupBy("term", id_col).agg(
         F.count("*").cast("bigint").alias("tf")
     )
     N = F.lit(n_docs).cast("double")
@@ -3255,7 +3127,7 @@ def gopher_rules(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     The whole operator is ONE whole-stage-codegen projection — no
     shuffle, no explode, no UDF; at 100 TB it is a map-only scan."""
-    w = F.split(F.trim(F.col(text_col)), r"\s+")
+    w = words(text_col)
     lines = F.split(F.col(text_col), r"\n")
     n = F.size(w).cast("bigint")
     sum_len = F.aggregate(
@@ -3337,7 +3209,7 @@ def c4_filters(docs: DataFrame, text_col: str = "text") -> DataFrame:
             | F.trim(x).endswith("?")
             | F.trim(x).endswith('"')
         )
-        & (F.size(F.split(F.trim(x), r"\s+")) >= 5),
+        & (F.size(words(x)) >= 5),
     )
     n_lines = F.size(lines).cast("bigint")
     n_kept = F.size(kept).cast("bigint")
@@ -3393,26 +3265,11 @@ def dsir_weights(
     """
     from tokens_ts import dedup
 
-    # r6: the old transform-over-positions re-evaluated
-    # split(trim(text)) INSIDE the lambda — interpreted HOF lambdas
-    # have no cross-element CSE, so every position re-split the whole
-    # text: O(words²) per doc. zip_with over two pre-sliced views
-    # splits once (arguments are evaluated once; the lambda touches
-    # only its elements). Identical gram strings: adjacent-pair
-    # concat, 1-word docs contribute their single word.
-    _w = F.split(F.trim(F.col(text_col)), r"\s+")
-    grams = F.when(
-        F.size(_w) >= 2,
-        F.zip_with(
-            F.slice(_w, 1, F.size(_w) - 1),
-            F.slice(_w, 2, F.size(_w) - 1),
-            lambda x, y: F.concat_ws(" ", x, y),
-        ),
-    ).otherwise(F.slice(_w, 1, 1))
+    # adjacent-word bigrams; a 1-word doc contributes its single word
     g = docs.select(
         F.col(id_col),
         is_target.alias("_t"),
-        F.explode(grams).alias("_g"),
+        F.explode(shingles(words(text_col), 2)).alias("_g"),
     ).select(
         id_col,
         "_t",
@@ -3512,7 +3369,7 @@ def bigram_pred_acc(
     NLL can differ sharply here.
 
     Pinned rules: bigrams keep the bigram_logprob contract (both sides
-    non-PAD, row-local position transform); the predictor for context
+    non-PAD, the row-local _bigrams stream); the predictor for context
     a is the highest-count continuation with ties broken to the
     SMALLEST token id (row_number over (count desc, b asc) — exact
     cross-engine); every kept bigram position scores 1 iff its b is
@@ -3523,23 +3380,7 @@ def bigram_pred_acc(
     and ONE corpus-sized equi-join (position stream ⋈ per-context
     argmax on a — broadcastable when the observed-context set is
     small). All counts exact; accuracy is one double division."""
-    toks = F.col(tokens_col)
-    pairs = seq.select(
-        source_col,
-        F.explode(
-            F.when(
-                F.size(toks) >= 2,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda i: F.struct(
-                        F.get(toks, i).alias("a"), F.get(toks, i + 1).alias("b")
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<a:int,b:int>>"))
-        ).alias("bg"),
-    ).select(source_col, "bg.a", "bg.b").where(
-        (F.col("a") != pad_id) & (F.col("b") != pad_id)
-    )
+    pairs = _bigrams(seq, tokens_col, pad_id, source_col)
     bgc = pairs.groupBy("a", "b").agg(F.count("*").alias("cab"))
     w = Window.partitionBy("a").orderBy(F.desc("cab"), F.asc("b"))
     pred = (
